@@ -102,18 +102,6 @@ def all_queries() -> dict[str, Query]:
     if newest is not None:
         idx = {name: i for i, name in enumerate(_REGISTRY)}
 
-        def _age(n: str) -> int:
-            # Touched-code boost (r14, VERDICT r13 #2/#3): a query
-            # whose IMPLEMENTATION was re-shaped by an optimization
-            # round after its newest gate round jumps to the front of
-            # the window so the driver oracle re-verifies the new
-            # code. Self-expiring: once a gate artifact from round
-            # >= _GATE_BOOST_ROUND records the query, the boost is
-            # inert and normal aging resumes.
-            if n in _GATE_BOOST and newest.get(n, 0) < _GATE_BOOST_ROUND:
-                return -1
-            return newest.get(n, 0)
-
         names = sorted(
             _REGISTRY,
             key=lambda n: (
@@ -122,7 +110,7 @@ def all_queries() -> dict[str, Query]:
                 2
                 if _REGISTRY[n].oracle is None
                 else (1 if n in _GATE_RETIRED else 0),
-                _age(n),                      # oldest artifact first
+                newest.get(n, 0),             # oldest artifact first
                 idx[n],                       # stable registry tiebreak
             ),
         )
@@ -170,30 +158,6 @@ from purpleair_data_logger_spark.queries import graph_sketches  # noqa: E402, F4
 #: hand-editing. They are kept (frozen at their r5 state) purely so an
 #: artifact-less install still gets a deterministic, all-oracled
 #: window.
-#: Queries whose OPERATOR CODE was re-shaped by the r13/r14
-#: optimization rounds after their newest driver-gate round (VERDICT
-#: r13 #2: the r13 sample missed the semantics-touching rewrites —
-#: substring coverage test, simhash F.expr fingerprint, centroid-norm
-#: literals, banded-DP spread — and r14 re-shaped the embedding LSH
-#: verify + incremental batch). Boosted to the front of the upcoming
-#: gate window so the oracle re-verifies the NEW code; the boost
-#: expires automatically once the query's newest artifact round equals
-#: the catalog's newest (see `_age` in all_queries). Only oracled,
-#: non-retired queries belong here (the all-oracled-window invariant
-#: is validated below either way).
-#: The boost targets the ROUND-14 gate: it applies until the query has
-#: an artifact row from round >= _GATE_BOOST_ROUND, then expires.
-_GATE_BOOST_ROUND = 14
-_GATE_BOOST: list[str] = [
-    "substring_search_trigram",
-    "simhash_neardups",
-    "ann_index_append",
-    "edit_distance_neardups",
-    "m4_lttb_downsample_events",
-    "embedding_neardup_lsh_verified",
-    "neardup_incremental_batch",
-]
-
 _GATE_PRIORITY: list[str] = [
     "neardup_cluster_dedup",
     "neardup_cluster_keep_best",

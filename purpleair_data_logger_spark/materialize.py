@@ -43,15 +43,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark import StorageLevel
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame
 
 #: Cluster deployments set this to an HDFS/S3/cluster-visible path to
 #: swap every materialize-once site from executor-memory localCheckpoint
-#: to reliable checkpoint files (read once per process change below).
+#: to reliable checkpoint files.
 CHECKPOINT_DIR_ENV = "SPARK_GRAFT_CHECKPOINT_DIR"
-
-_dir_set_for: str | None = None
 
 
 def checkpoint_dir() -> str | None:
@@ -59,6 +57,25 @@ def checkpoint_dir() -> str | None:
     for the local default. Read from the environment per call so tests
     can monkeypatch it."""
     return os.environ.get(CHECKPOINT_DIR_ENV) or None
+
+
+def use_checkpoint_dir(sc: SparkContext, directory: str) -> None:
+    """Point ``sc``'s reliable checkpoints at ``directory`` unless they
+    already go there. The context itself is the record: Spark stores
+    the qualified ``<directory>/<uuid>``, so its parent is compared with
+    ``directory`` qualified the same way. Whoever set the directory
+    last (this seam or an explicit `clusters` checkpoint_dir), the next
+    caller re-asserts its own."""
+    current = sc.getCheckpointDir()
+    if current is not None:
+        fs_path = sc._jvm.org.apache.hadoop.fs.Path
+        wanted = fs_path(directory)
+        wanted = wanted.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(
+            wanted
+        )
+        if fs_path(current).getParent().equals(wanted):
+            return
+    sc.setCheckpointDir(directory)
 
 
 def materialize_once(df: DataFrame, *, serialized: bool = False) -> DataFrame:
@@ -74,13 +91,9 @@ def materialize_once(df: DataFrame, *, serialized: bool = False) -> DataFrame:
     honored on the local path; reliable checkpoints are files and have
     no in-memory object form to begin with.
     """
-    global _dir_set_for
     reliable = checkpoint_dir()
     if reliable:
-        sc = df.sparkSession.sparkContext
-        if _dir_set_for != reliable:
-            sc.setCheckpointDir(reliable)
-            _dir_set_for = reliable
+        use_checkpoint_dir(df.sparkSession.sparkContext, reliable)
         return df.checkpoint(eager=False)
     if serialized:
         return df.localCheckpoint(

@@ -76,13 +76,17 @@ def _checkpointer(df_sample: DataFrame, checkpoint_dir: str | None):
         from purpleair_data_logger_spark.materialize import materialize_once
 
         return materialize_once
-    from purpleair_data_logger_spark import materialize
+    from purpleair_data_logger_spark.materialize import use_checkpoint_dir
 
     sc = df_sample.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
-    # the context's checkpoint dir just changed under the seam's cache
-    materialize._dir_set_for = None
-    return lambda df: df.checkpoint(eager=True)
+
+    def _reliable(df: DataFrame) -> DataFrame:
+        # re-asserted per round: a materialize_once call between rounds
+        # may have pointed the context at SPARK_GRAFT_CHECKPOINT_DIR
+        use_checkpoint_dir(sc, checkpoint_dir)
+        return df.checkpoint(eager=True)
+
+    return _reliable
 
 
 def connected_components(

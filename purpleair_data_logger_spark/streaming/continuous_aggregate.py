@@ -6,10 +6,10 @@ to 1 hour and refreshes hourly over the window (now−3 h, now−1 h],
 retaining 8 h. Spark-native equivalents, both provided:
 
 * `streaming_hourly_aggregate` — Structured Streaming: file-source
-  readStream over the stored table, 2 h watermark (reproducing the
+  stream over the stored table, 2 h watermark (reproducing the
   1-3 h refresh-lag semantics), 1 h tumbling window, append-mode
-  parquet sink with checkpointing. Use ``trigger(availableNow=True)``
-  for incremental catch-up runs, processingTime for always-on.
+  parquet sink with checkpointing; each run drains the new files with
+  ``trigger(availableNow=True)`` (incremental catch-up).
 * `batch_hourly_refresh` — the scheduled-batch formulation: recompute
   only buckets inside the refresh window and overwrite them — what the
   Timescale refresh policy does, expressed as partition-scoped work.
@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
 
 
 def hourly_aggregate_plan(df: DataFrame, *, value_cols: list[str] | None = None) -> DataFrame:
@@ -49,28 +51,20 @@ def streaming_hourly_aggregate(
     *,
     value_cols: list[str] | None = None,
     watermark: str = "2 hours",
-    available_now: bool = True,
-    trigger_seconds: int = 3600,
 ) -> StreamingQuery:
     """Incrementally-maintained hourly rollup via Structured Streaming."""
     from ..io import normalize_timestamps
 
-    static = spark.read.parquet(source_path)
-    stream = normalize_timestamps(
-        spark.readStream.schema(static.schema).parquet(source_path)
-    ).withWatermark("data_time_stamp", watermark)
-    agg = hourly_aggregate_plan(stream, value_cols=value_cols)
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_path)
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: hourly_aggregate_plan(
+            normalize_timestamps(stream).withWatermark("data_time_stamp", watermark),
+            value_cols=value_cols,
+        ),
+        sink_path=sink_path,
+        checkpoint_path=checkpoint_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def batch_hourly_refresh(

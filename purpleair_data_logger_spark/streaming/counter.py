@@ -35,6 +35,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("last_c", T.LongType()),
@@ -186,24 +188,19 @@ def streaming_counter_increments(
 ) -> StreamingQuery:
     """File-source → stateful increments → parquet append sink. The
     per-bucket delta is then a plain bucketed SUM over the sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-    out = counter_increments_by_key(
-        stream,
-        key_col,
-        ts_col,
-        id_col,
-        value_col,
-        decimals=decimals,
-        watermark=watermark,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: counter_increments_by_key(
+            stream,
+            key_col,
+            ts_col,
+            id_col,
+            value_col,
+            decimals=decimals,
+            watermark=watermark,
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

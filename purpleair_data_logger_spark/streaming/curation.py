@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from purpleair_data_logger_spark.operators import pii
 from purpleair_data_logger_spark.operators import sampling as smp
 from purpleair_data_logger_spark.operators import text as tx
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
 
 
 def curate_stream(
@@ -171,21 +172,6 @@ def run_corpus_build_stream(
     The overlap check runs on the PII-scrubbed text (that is the text
     being trained on).
     """
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    curated = curate_split_stream(
-        stream,
-        id_col,
-        text_col,
-        cluster_assignments=cluster_assignments,
-        ts_col=ts_col,
-        dedup_within=dedup_within,
-    )
-
     from purpleair_data_logger_spark.operators.dedup import shingles
     from purpleair_data_logger_spark.operators.packing import pack_sequences
 
@@ -240,11 +226,20 @@ def run_corpus_build_stream(
         ).withColumn("batch_id", F.lit(batch_id))
         packed.write.mode("append").parquet(f"{out_dir}/packed")
 
-    return (
-        curated.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_dir,
+        lambda stream: curate_split_stream(
+            stream,
+            id_col,
+            text_col,
+            cluster_assignments=cluster_assignments,
+            ts_col=ts_col,
+            dedup_within=dedup_within,
+        ),
+        checkpoint_path=checkpoint_dir,
+        foreach_batch=_write_batch,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -263,19 +258,13 @@ def run_curation_stream(
     """File-source streaming curation job: parquet-in → curate →
     parquet-out, one micro-batch per input file by default (true
     cross-batch dedup state), availableNow termination."""
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    curated = curate_stream(
-        stream, id_col, text_col, ts_col=ts_col, dedup_within=dedup_within
-    )
-    return (
-        curated.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_dir,
+        lambda stream: curate_stream(
+            stream, id_col, text_col, ts_col=ts_col, dedup_within=dedup_within
+        ),
+        sink_path=out_dir,
+        checkpoint_path=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger,
     )

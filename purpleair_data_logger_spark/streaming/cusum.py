@@ -47,6 +47,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from purpleair_data_logger_spark.streaming.counter import scale_half_up
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -294,29 +295,24 @@ def streaming_cusum_twosided_alarms(
 ) -> StreamingQuery:
     """File-source wrapper for the two-sided detector (the
     `streaming_cusum_alarms` template)."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path).join(targets, on=key_col)
-    out = cusum_twosided_alarms_by_key(
-        stream,
-        key_col,
-        ts_col,
-        id_col,
-        value_col,
-        target_col,
-        slack=slack,
-        threshold=threshold,
-        decimals=decimals,
-        watermark=watermark,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: cusum_twosided_alarms_by_key(
+            stream.join(targets, on=key_col),
+            key_col,
+            ts_col,
+            id_col,
+            value_col,
+            target_col,
+            slack=slack,
+            threshold=threshold,
+            decimals=decimals,
+            watermark=watermark,
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -342,27 +338,22 @@ def streaming_cusum_alarms(
     parquet append sink. ``targets`` is the static per-key calibration
     table (key_col, target_col); the stream-static equi-join
     broadcasts it when small, per ordinary join planning."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path).join(targets, on=key_col)
-    out = cusum_alarms_by_key(
-        stream,
-        key_col,
-        ts_col,
-        id_col,
-        value_col,
-        target_col,
-        slack=slack,
-        threshold=threshold,
-        decimals=decimals,
-        watermark=watermark,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: cusum_alarms_by_key(
+            stream.join(targets, on=key_col),
+            key_col,
+            ts_col,
+            id_col,
+            value_col,
+            target_col,
+            slack=slack,
+            threshold=threshold,
+            decimals=decimals,
+            watermark=watermark,
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 
 def dedup_within_watermark(
     stream: DataFrame, key_cols: list[str], ts_col: str, *, watermark: str
@@ -49,7 +51,6 @@ def streaming_pk_dedup(
     key_cols: list[str],
     ts_col: str,
     watermark: str = "1 hour",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """File-source → dedup-within-watermark → parquet append sink.
@@ -57,17 +58,13 @@ def streaming_pk_dedup(
     ``max_files_per_trigger=1`` forces one micro-batch per input file —
     used by the cross-batch re-delivery test to prove dedup state
     survives between triggers."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-    deduped = dedup_within_watermark(stream, key_cols, ts_col, watermark=watermark)
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: dedup_within_watermark(
+            stream, key_cols, ts_col, watermark=watermark
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

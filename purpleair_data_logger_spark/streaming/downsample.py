@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 
 def m4_aggs(ts_col: str, value_col: str) -> list:
     """The M4 extreme set as aggregate expressions — identical tie
@@ -87,18 +89,16 @@ def streaming_m4_downsample(
     watermarked windowed M4 aggregate → append-mode parquet. A bucket
     emits once its window passes the watermark (final, immutable
     pixels — the property a cached dashboard tile needs)."""
-    static = spark.read.parquet(source_path)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .parquet(source_path)
-        .withWatermark(ts_col, watermark)
-    )
-    plan = m4_stream_plan(stream, ts_col, key_col, value_col, bucket_seconds)
-    return (
-        plan.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: m4_stream_plan(
+            stream.withWatermark(ts_col, watermark),
+            ts_col,
+            key_col,
+            value_col,
+            bucket_seconds,
+        ),
+        sink_path=sink_path,
+        checkpoint_path=checkpoint_path,
     )

@@ -42,6 +42,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("last_us", T.LongType()),
@@ -176,23 +178,18 @@ def streaming_downtime_incidents(
     """File-source → stateful gap detection → parquet append sink.
     ``closed`` partitions alert rows from the batch-parity incident
     report."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-    out = downtime_incidents_by_key(
-        stream,
-        key_col,
-        ts_col,
-        id_col,
-        threshold_seconds=threshold_seconds,
-        watermark=watermark,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: downtime_incidents_by_key(
+            stream,
+            key_col,
+            ts_col,
+            id_col,
+            threshold_seconds=threshold_seconds,
+            watermark=watermark,
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

@@ -31,6 +31,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 
 def _out_schema(key_field: T.StructField, ts_field: T.StructField) -> T.StructType:
     return T.StructType(
@@ -126,23 +128,16 @@ def streaming_ewma(
     value_col: str,
     alpha: float = 0.3,
     watermark: str = "1 hour",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """File-source → stateful EWMA → parquet append sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-    out = ewma_by_key(
-        stream, key_col, ts_col, value_col, alpha=alpha, watermark=watermark
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: ewma_by_key(
+            stream, key_col, ts_col, value_col, alpha=alpha, watermark=watermark
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

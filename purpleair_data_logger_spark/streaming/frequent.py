@@ -51,6 +51,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("items", T.ArrayType(T.StringType())),
@@ -255,20 +257,13 @@ def streaming_frequent_items(
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """File-source → per-group MG summaries → parquet append sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = frequent_items_by_group(
-        reader.parquet(source_path),
-        group_col,
-        value_col,
-        support_bp=support_bp,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: frequent_items_by_group(
+            stream, group_col, value_col, support_bp=support_bp
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

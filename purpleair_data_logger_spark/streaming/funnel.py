@@ -46,6 +46,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 _NONE = -1  # state sentinel for "not yet" (epoch-µs are non-negative)
 
 _STATE_SCHEMA = T.StructType(
@@ -200,17 +202,11 @@ def streaming_funnel(
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """File-source → per-user funnel snapshots → parquet append sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = funnel_by_user(
-        reader.parquet(source_path), user_col, type_col, ts_col
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: funnel_by_user(stream, user_col, type_col, ts_col),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

@@ -52,6 +52,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("emitted_until", T.LongType()),   # last emitted idx
@@ -226,24 +228,19 @@ def streaming_gapfill_locf(
     """File-source → stateful gap-fill → parquet append sink; rows are
     final (a bucket emits exactly once, when the watermark closes it).
     """
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-    out = gapfill_locf_by_key(
-        stream,
-        key_col,
-        ts_col,
-        value_col,
-        bucket_seconds=bucket_seconds,
-        max_fill_buckets=max_fill_buckets,
-        watermark=watermark,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: gapfill_locf_by_key(
+            stream,
+            key_col,
+            ts_col,
+            value_col,
+            bucket_seconds=bucket_seconds,
+            max_fill_buckets=max_fill_buckets,
+            watermark=watermark,
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

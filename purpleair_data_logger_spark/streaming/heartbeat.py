@@ -45,6 +45,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("last_us", T.LongType()),
@@ -180,23 +182,18 @@ def streaming_heartbeat_intervals(
     """File-source → stateful interval closure → parquet append sink.
     Per-bucket uptime composes downstream via the batch clip-to-bucket
     arithmetic over the emitted (t_us, end_us) rows."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-    out = heartbeat_intervals_by_key(
-        stream,
-        key_col,
-        ts_col,
-        id_col,
-        timeout_seconds=timeout_seconds,
-        watermark=watermark,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: heartbeat_intervals_by_key(
+            stream,
+            key_col,
+            ts_col,
+            id_col,
+            timeout_seconds=timeout_seconds,
+            watermark=watermark,
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

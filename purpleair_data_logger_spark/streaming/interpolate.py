@@ -40,6 +40,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("prev_idx", T.LongType()),
@@ -190,24 +192,19 @@ def streaming_gapfill_interpolate(
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """File-source → stateful interpolation → parquet append sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-    out = gapfill_interpolate_by_key(
-        stream,
-        key_col,
-        ts_col,
-        value_col,
-        bucket_seconds=bucket_seconds,
-        max_gap_buckets=max_gap_buckets,
-        watermark=watermark,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: gapfill_interpolate_by_key(
+            stream,
+            key_col,
+            ts_col,
+            value_col,
+            bucket_seconds=bucket_seconds,
+            max_gap_buckets=max_gap_buckets,
+            watermark=watermark,
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

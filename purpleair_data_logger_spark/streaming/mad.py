@@ -55,6 +55,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("median", T.DoubleType()),
@@ -210,26 +212,22 @@ def streaming_mad_outliers(
 ) -> StreamingQuery:
     """File-source → stateful MAD trackers → parquet append sink (the
     `streaming_cusum_alarms` template)."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = mad_outlier_flags_by_key(
-        reader.parquet(source_path),
-        key_col,
-        ts_col,
-        id_col,
-        value_col,
-        median_step=median_step,
-        mad_step=mad_step,
-        k=k,
-        min_samples=min_samples,
-        watermark=watermark,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: mad_outlier_flags_by_key(
+            stream,
+            key_col,
+            ts_col,
+            id_col,
+            value_col,
+            median_step=median_step,
+            mad_step=mad_step,
+            k=k,
+            min_samples=min_samples,
+            watermark=watermark,
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

@@ -70,6 +70,7 @@ from purpleair_data_logger_spark.operators.dedup import (
     prefix_index_append,
     shingles,
 )
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
 
 
 def _check_maintenance_args(fold_every, recent_window_batches) -> None:
@@ -301,13 +302,6 @@ def _run_ingest_dedup_stream(
     fold / recent-window maintenance hook; it receives the batch's
     FRESH docs (near-dups of an indexed doc never re-enter any
     index)."""
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
     def _mine_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint()  # one mining pass, two sinks
         pairs = mine(batch_df).localCheckpoint()
@@ -323,11 +317,12 @@ def _run_ingest_dedup_stream(
         if post_batch is not None:
             post_batch(fresh, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_mine_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_dir,
+        checkpoint_path=checkpoint_dir,
+        foreach_batch=_mine_batch,
+        max_files_per_trigger=max_files_per_trigger,
     )
 
 

@@ -39,6 +39,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from purpleair_data_logger_spark.operators.dedup import md5_long
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
 
 _STATE_SCHEMA = T.StructType([T.StructField("cum_tokens", T.LongType())])
 
@@ -140,21 +141,13 @@ def streaming_pack(
 ) -> StreamingQuery:
     """File-source → stateful packing assignments → parquet append
     sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = pack_by_shard(
-        reader.parquet(source_path),
-        id_col,
-        token_count_col,
-        budget=budget,
-        n_shards=n_shards,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: pack_by_shard(
+            stream, id_col, token_count_col, budget=budget, n_shards=n_shards
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 
 def session_window_stats(
     df: DataFrame, key_col: str, ts_col: str, *, gap_seconds: int
@@ -65,9 +67,8 @@ def streaming_session_stats(
     checkpoint_path: str | None = None,
     query_name: str = "sessions",
     output_mode: str = "append",
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """File-source readStream → session_window agg → sink.
+    """File-source stream → session_window agg → sink.
 
     ``sink_path`` set: append-mode parquet sink with checkpointing
     (only watermark-finalized sessions are emitted — the production
@@ -77,22 +78,17 @@ def streaming_session_stats(
     """
     from ..io import normalize_timestamps
 
-    schema = spark.read.parquet(source_path).schema
-    stream = normalize_timestamps(
-        spark.readStream.schema(schema).parquet(source_path)
-    ).withWatermark(ts_col, watermark)
-    agg = session_window_stats(stream, key_col, ts_col, gap_seconds=gap_seconds)
-    if sink_path is not None:
-        writer = (
-            agg.writeStream.outputMode(output_mode)
-            .format("parquet")
-            .option("path", sink_path)
-            .option("checkpointLocation", checkpoint_path)
-        )
-    else:
-        writer = agg.writeStream.outputMode(output_mode).format("memory").queryName(
-            query_name
-        )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: session_window_stats(
+            normalize_timestamps(stream).withWatermark(ts_col, watermark),
+            key_col,
+            ts_col,
+            gap_seconds=gap_seconds,
+        ),
+        sink_path=sink_path,
+        checkpoint_path=checkpoint_path,
+        query_name=query_name,
+        output_mode=output_mode,
+    )

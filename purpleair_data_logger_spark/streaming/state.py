@@ -32,6 +32,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
+
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("last_us", T.LongType()),
@@ -134,18 +136,13 @@ def streaming_state_transitions(
 ) -> StreamingQuery:
     """File-source → stateful transition detection → parquet append
     sink; rows are final (append-safe) — a transition never retracts."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-    out = state_transitions_by_key(
-        stream, key_col, ts_col, id_col, state_col, watermark=watermark
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: state_transitions_by_key(
+            stream, key_col, ts_col, id_col, state_col, watermark=watermark
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

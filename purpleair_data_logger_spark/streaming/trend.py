@@ -36,6 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from purpleair_data_logger_spark.streaming.counter import scale_half_up
+from purpleair_data_logger_spark.streaming.filestream import run_file_stream
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -157,24 +158,19 @@ def streaming_trend(
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """File-source → incremental Gram state → parquet append sink."""
-    reader = spark.readStream.schema(spark.read.parquet(source_path).schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_path)
-    out = trend_by_key(
-        stream,
-        key_col,
-        ts_col,
-        id_col,
-        value_col,
-        decimals=decimals,
-        watermark=watermark,
-    )
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return run_file_stream(
+        spark,
+        source_path,
+        lambda stream: trend_by_key(
+            stream,
+            key_col,
+            ts_col,
+            id_col,
+            value_col,
+            decimals=decimals,
+            watermark=watermark,
+        ),
+        sink_path=out_path,
+        checkpoint_path=checkpoint_path,
+        max_files_per_trigger=max_files_per_trigger,
     )

@@ -115,32 +115,21 @@ def test_gate_window_rotates_oldest_artifact_first():
     assert buckets == sorted(buckets)
     first_retired = buckets.index(1) if 1 in buckets else len(names)
 
-    # effective age mirrors catalog._age: the r14 touched-code boost
-    # fronts re-shaped queries until an artifact from round >=
-    # _GATE_BOOST_ROUND records them, then expires
     def age(n):
-        if n in catalog._GATE_BOOST and newest.get(n, 0) < catalog._GATE_BOOST_ROUND:
-            return -1
         return newest.get(n, 0)
 
-    # active oracled section is sorted by effective age ascending
+    # active oracled section is sorted by newest artifact round ascending
     rounds = [age(n) for n in names[:first_retired]]
     assert rounds == sorted(rounds)
     # a query never seen in any artifact (round 0) gates ahead of
-    # everything except the explicit boost tier
+    # everything
     assert min(rounds) == rounds[0]
-    # freshness: no rotating query OUTSIDE the window is (effectively)
-    # staler than anything inside it
+    # freshness: no rotating query OUTSIDE the window is staler than
+    # anything inside it
     if first_retired > 50:
         assert max(age(n) for n in window) <= min(
             age(n) for n in names[50:first_retired]
         )
-    # the boost can never smuggle a rows-only or retired query into
-    # the window, and it must self-expire (every boosted name either
-    # has no round->=14 artifact yet, or sorts by its real age)
-    for n in catalog._GATE_BOOST:
-        assert catalog._REGISTRY[n].oracle is not None
-        assert n not in catalog._GATE_RETIRED
 
 
 def test_gate_retirement_contract():

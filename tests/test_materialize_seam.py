@@ -52,7 +52,6 @@ def test_reliable_checkpoint_dir_identical_results(spark, tmp_path, monkeypatch)
 
     ckdir = str(tmp_path / "seam_ckpt")
     monkeypatch.setenv(materialize.CHECKPOINT_DIR_ENV, ckdir)
-    monkeypatch.setattr(materialize, "_dir_set_for", None)
     try:
         reliable_pairs = _collect_pairs(
             dd.neardup_lsh_verified(docs, "doc_id", "text", threshold=0.8),
@@ -69,22 +68,61 @@ def test_reliable_checkpoint_dir_identical_results(spark, tmp_path, monkeypatch)
     finally:
         # restore the session's local-default posture for later tests
         monkeypatch.delenv(materialize.CHECKPOINT_DIR_ENV, raising=False)
-        materialize._dir_set_for = None
+
+
+def _files_under(path):
+    return sorted(
+        os.path.join(root, name)
+        for root, _dirs, files in os.walk(path)
+        for name in files
+    )
+
+
+def test_explicit_and_env_checkpoint_dirs_stay_apart(spark, tmp_path, monkeypatch):
+    """An explicit `clusters` checkpoint_dir and SPARK_GRAFT_CHECKPOINT_DIR
+    share one SparkContext setting; whichever runs next must re-assert
+    its own directory, in either order."""
+    from purpleair_data_logger_spark.operators.clusters import _checkpointer
+
+    dir_a = str(tmp_path / "explicit")
+    dir_b = str(tmp_path / "env")
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], ["src", "dst"])
+    explicit = _checkpointer(edges, dir_a)
+    explicit(edges).collect()
+    written_a = _files_under(dir_a)
+    assert written_a
+
+    monkeypatch.setenv(materialize.CHECKPOINT_DIR_ENV, dir_b)
+    try:
+        materialize.materialize_once(edges.select("src")).collect()
+        assert _files_under(dir_b), "env seam did not write under its dir"
+        assert _files_under(dir_a) == written_a, "env seam wrote under the explicit dir"
+
+        written_b = _files_under(dir_b)
+        explicit(edges.select("dst")).collect()
+        assert _files_under(dir_b) == written_b, "explicit round wrote under the env dir"
+        assert len(_files_under(dir_a)) > len(written_a)
+    finally:
+        monkeypatch.delenv(materialize.CHECKPOINT_DIR_ENV, raising=False)
 
 
 def test_seam_covers_every_query_path_site():
-    """No bare localCheckpoint on batch query paths: operators must go
-    through the seam so SPARK_GRAFT_CHECKPOINT_DIR governs them all.
-    (Streaming fold paths keep their own eager localCheckpoints — state
-    carried across micro-batches is a different lifecycle.)"""
+    """No bare localCheckpoint on batch query paths: every module outside
+    `streaming/` must go through the seam so SPARK_GRAFT_CHECKPOINT_DIR
+    governs them all. (Streaming fold paths keep their own eager
+    localCheckpoints — state carried across micro-batches is a different
+    lifecycle.)"""
     import pathlib
 
-    ops_dir = pathlib.Path(dd.__file__).parent
+    pkg = pathlib.Path(materialize.__file__).parent
     offenders = []
-    for p in ops_dir.glob("*.py"):
+    for p in pkg.rglob("*.py"):
+        rel = p.relative_to(pkg)
+        if rel.parts[0] == "streaming" or rel.name == "materialize.py":
+            continue
         for i, line in enumerate(p.read_text().splitlines(), 1):
             if ".localCheckpoint(" in line and "materialize" not in line:
-                offenders.append(f"{p.name}:{i}")
+                offenders.append(f"{rel}:{i}")
     assert not offenders, offenders
 
 

@@ -354,7 +354,6 @@ def test_streaming_hourly_aggregate_available_now(spark, tmp_path):
         str(tmp_path / "agg"),
         str(tmp_path / "ckpt"),
         value_cols=["humidity"],
-        available_now=True,
     )
     assert q.awaitTermination(120), "stream did not finish in 120s"
     out = spark.read.parquet(str(tmp_path / "agg"))
