@@ -25,7 +25,7 @@ from purpleair_data_logger_spark.session import get_spark  # noqa: E402
 # Derived, not hand-maintained (r9 VERDICT #2: a hand-kept list silently
 # unbenched a new catalog query and cost a bench run): every registered
 # catalog query is benched, in registration (source) order — stable
-# across rounds, unlike all_queries()'s artifact-driven gate order.
+# across rounds, independent of the driver's gate order.
 # Adding a catalog query with no bench.py edit benches it automatically;
 # there is no way to omit one short of deleting its registration.
 HEADLINE = catalog.registered_names()

@@ -41,18 +41,6 @@ def max_age(df: DataFrame, seconds: int, *, now: Column | None = None) -> DataFr
     )
 
 
-def bounding_box(
-    df: DataFrame, nwlng: float, nwlat: float, selng: float, selat: float
-) -> DataFrame:
-    """F5: 2-D spatial range predicate (PurpleAirAPI.py:213-221)."""
-    return df.filter(
-        (F.col("latitude") <= F.lit(nwlat))
-        & (F.col("latitude") >= F.lit(selat))
-        & (F.col("longitude") >= F.lit(nwlng))
-        & (F.col("longitude") <= F.lit(selng))
-    )
-
-
 def time_range(df: DataFrame, ts_col: str, start_epoch: int, end_epoch: int) -> DataFrame:
     """F6: half-open historic range — ts >= start AND ts < end
     (PurpleAirAPI.py:252-259). Prunes partitions when ts is the
@@ -60,13 +48,4 @@ def time_range(df: DataFrame, ts_col: str, start_epoch: int, end_epoch: int) -> 
     return df.filter(
         (F.col(ts_col) >= F.timestamp_seconds(F.lit(start_epoch)))
         & (F.col(ts_col) < F.timestamp_seconds(F.lit(end_epoch)))
-    )
-
-
-def dashboard_filter(
-    df: DataFrame, ts_col: str, start_epoch: int, end_epoch: int, sensor_index: int
-) -> DataFrame:
-    """F7: the Grafana panel predicate — $__timeFilter + sensor equality."""
-    return time_range(df, ts_col, start_epoch, end_epoch).filter(
-        F.col("sensor_index") == F.lit(sensor_index)
     )

@@ -129,23 +129,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return planes
 
 
-def lsh_bucket_signature(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-of-dot-product bit signature against fixed hyperplanes.
-
-    Same flat multiply-add formulation as `lsh_band_signatures` (plane
-    weights are literals, so the dot is codegen-able arithmetic).
-    """
-    elems = [vec_col[d] for d in range(len(planes[0]))]
-    bits = []
-    for i, plane in enumerate(planes):
-        d = sum((elems[j] * plane[j] for j in range(1, len(plane))), elems[0] * plane[0])
-        bits.append(F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long")))
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig
-
-
 def lsh_band_signatures(vec_col: Column, planes: list[list[float]], bands: int) -> Column:
     """Array of per-band sign signatures (OR-amplified LSH index).
 
@@ -452,7 +435,8 @@ def cosine_neardup_lsh_verified(
     deployments mining real corpora run True — at 100 TB the pair
     table's vector payload is the dominant shuffle by orders of
     magnitude. Both forms return identical rows (same candidates, same
-    verify arithmetic; parity pinned in tests/test_llm_ops.py).
+    verify arithmetic; parity pinned in tests/test_llm_ops.py), one per
+    id pair also when an id repeats in ``df`` with the same vector.
     """
     from purpleair_data_logger_spark.materialize import materialize_once
     from purpleair_data_logger_spark.operators.dedup import (
@@ -513,10 +497,15 @@ def cosine_neardup_lsh_verified(
         # infer isnotnull(norm) from the threshold filter and push the
         # whole 64-element fold BELOW the candidate semi-join — every
         # corpus row would pay it (r14 plan dump).
+        # One fetched row per candidate id: a duplicated id in `base`
+        # would otherwise fan out every pair it is in, where the
+        # default form's pair dedup keeps one row per pair.
         def side(pair_col: str, vec_out: str) -> DataFrame:
             ids = pairs.select(F.col(pair_col).alias(id_col))
-            return base.join(ids, id_col, "left_semi").select(
-                F.col(id_col).alias("_sid"), F.col("_v").alias(vec_out)
+            return (
+                base.join(ids, id_col, "left_semi")
+                .dropDuplicates([id_col])
+                .select(F.col(id_col).alias("_sid"), F.col("_v").alias(vec_out))
             )
 
         pairs = (

@@ -3,8 +3,8 @@
 Split from catalog.py in r12 (VERDICT r11 #7). Registration order is
 load-bearing: catalog.py imports the family modules in the original
 single-file source order, and queries register in module-body order,
-so `all_queries()` and the gate window are byte-identical to the
-pre-split catalog."""
+so the registration order is byte-identical to the pre-split
+catalog's."""
 
 from __future__ import annotations
 

@@ -10,17 +10,20 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__ as entrymod  # noqa: E402
 from purpleair_data_logger_spark import catalog  # noqa: E402
 
 
 def main() -> None:
-    qs = catalog.all_queries()
+    reg = catalog.all_queries()
+    qs = {name: reg[name] for name in entrymod.queries()}
     lines = [
         "# QUERIES — catalog index (generated by scripts/gen_query_index.py)",
         "",
         f"{len(qs)} queries. The driver's correctness gate records the "
-        "first 50 (`catalog.all_queries` order; see `_GATE_PRIORITY` / "
-        "`_GATE_DEFER`). `oracle`: full DuckDB SQL replay; `rows-only`: "
+        "first 50 (`__spark_entry__.queries()` order: oldest driver-gate "
+        "artifact first, gate-retired and rows-only last). `oracle`: full "
+        "DuckDB SQL replay; `rows-only`: "
         "non-SQL-expressible (iterative/approximate), pytest-pinned "
         "instead.",
         "",
@@ -28,7 +31,7 @@ def main() -> None:
         "|---|---|---|---|",
     ]
     for i, (name, q) in enumerate(qs.items(), 1):
-        gate = "gated" if i <= 50 else "deferred"
+        gate = "gated" if i <= entrymod.GATE_WINDOW else "deferred"
         kind = "oracle" if q.oracle else "rows-only"
         ref = " ".join(q.survey_ref.split())
         lines.append(f"| {i} ({gate}) | `{name}` | {kind} | {ref} |")

@@ -141,21 +141,25 @@ def test_cosine_lsh_fetch_modes_identical_rows(spark, sf_dir):
     see the operator docstring) must return EXACTLY the rows of the
     default vectors-ride form: same candidates by construction (same
     band signatures, same dedup keys) and the same verify arithmetic
-    on the same double-cast vectors."""
+    on the same double-cast vectors. Also on duplicate-id input (a
+    re-ingested row): both forms keep one row per id pair."""
     em = load_table(spark, sf_dir, "embeddings")
+    dup = em.unionByName(em.filter(F.col("vec_id") < 40))
 
-    def run(ids_only: bool):
+    def run(df, ids_only: bool):
         return sorted(
             (r["vec_id_a"], r["vec_id_b"], r["cosine_sim"])
             for r in sim.cosine_neardup_lsh_verified(
-                em, "vec_id", "embedding", threshold=0.4,
+                df, "vec_id", "embedding", threshold=0.4,
                 n_planes=36, bands=12, fetch_vectors_by_id=ids_only,
             ).collect()
         )
 
-    rows_default = run(False)
+    rows_default = run(em, False)
     assert rows_default  # the wide threshold yields real pairs
-    assert run(True) == rows_default
+    assert run(em, True) == rows_default
+    assert run(dup, False) == rows_default
+    assert run(dup, True) == rows_default
 
 
 def test_cosine_neardup_lsh_verified_recall_and_precision(spark, sf_dir):
